@@ -83,82 +83,82 @@ def events_tbl(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The driver's correctness gate scores the FIRST 50 catalog entries in
 # registration order, and the window ROTATES each round so cumulative
-# driver evidence grows instead of re-stamping the same 50. Rounds 1-13
-# stamped the ENTIRE 459-entry r13 catalog green (cumulative 459/459,
-# r13 50/50) — the never-stamped queue is EMPTY as of r13. r14 is
-# therefore the first pad-dominated round (VERDICT r13 ask #1): the
-# window = 5 sentinels + this round's few net-new entries + the
-# oldest-stamp pad filling every remaining slot, because fixtures
-# regenerate between rounds and old stamps decay in value.
+# driver evidence grows instead of re-stamping the same 50. Rounds 1-14
+# stamped the ENTIRE 461-entry catalog green (cumulative 461/461), so
+# the never-stamped queue is EMPTY and the window is pad-dominated:
+# 5 sentinels + the oldest-stamp pad filling the other 45 slots,
+# because fixtures regenerate between rounds and old stamps decay in
+# value. The r16 window below is the --emit-next output over r1-r15.
 # tests/test_driver_window.py pins the order, asserts the rotation
 # hygiene (non-sentinel, non-pad entries must be never-stamped),
 # recomputes the pad MECHANICALLY (oldest latest-stamp first, name
 # tie-break — VERDICT r10 ask #5), and checks family coverage over the
-# CUMULATIVE stamped set.
-ROUND = 14  # current build round; CORRECTNESS_r{<ROUND}.json are priors
+# CUMULATIVE stamped set. Rotate with tools/window_audit.py
+# --emit-next once the driver has recorded CORRECTNESS_r{ROUND}.json,
+# pasting its ROUND line and both tuples together.
+ROUND = 16  # current build round; CORRECTNESS_r{<ROUND}.json are priors
 
 # staleness re-checks: previously stamped (allowed to repeat). The pad
 # fills the free slots left after every never-stamped entry is
 # windowed, picking the entries whose LATEST green stamp is oldest
-# (ties broken by name) — for r14 that is the r2/r3-vintage rows in
-# the rotation, emitted verbatim by tools/window_audit.py --emit-next.
+# (ties broken by name) — for r16 that is the 8 entries last stamped
+# in r4 and 37 of those last stamped in r5, emitted verbatim by
+# tools/window_audit.py --emit-next.
 # test_driver_window.py::test_pad_is_exactly_the_oldest_stamps
 # recomputes this from CORRECTNESS_r*.json, so the pad can never be
 # hand-picked.
 WINDOW_STALENESS_PAD: tuple[str, ...] = (
-    "topk_global",
-    "udaf_pandas_integer_mean",
-    "udtf_chunk_text",
-    "unpivot_part",
-    "var_std_exact",
-    "window_rank_lag",
-    "anomaly_zscore_rolling",
-    "attribution_last_touch",
-    "cohort_retention_weekly",
-    "copurchase_pairs_topk",
-    "decontam_ngram_overlap",
-    "dedup_simhash",
-    "entity_resolution_pipeline",
-    "event_transition_matrix",
-    "graph_bfs_hops",
-    "join_fuzzy_levenshtein",
-    "join_range_intervals",
-    "join_salted_skew",
-    "layout_zorder_key",
-    "mm_decode_bmp",
-    "mm_decode_wav",
-    "mm_sample_frames",
-    "mode_per_group",
-    "pack_context_windows",
-    "q11_important_stock",
-    "q16_supplier_relationship",
-    "q20_excess_shipper",
-    "quality_repetition",
-    "rfm_scores",
-    "sample_k_per_group",
-    "sample_stratified_hash",
-    "scd2_intervals",
-    "session_path_trigrams",
-    "shuffle_shards",
-    "sim_ann_lsh",
-    "stateful_user_stats",
-    "stream_dedup_within_watermark",
-    "stream_sliding_window",
-    "table_diff_keyed",
-    "text_bm25_topk",
-    "text_fingerprint",
-    "text_inverted_index",
-    "text_langid",
+    "text_scrub_pii",
+    "text_tf_df",
+    "trending_topk_daily",
+    "triangle_count",
+    "weighted_sample_es",
+    "window_count_distinct",
+    "window_range_frame",
+    "winsorized_sum",
+    "agg_exact_stats",
+    "array_funcs",
+    "decontam_bloom_prefilter",
+    "dedup_components_star",
+    "dq_constraints",
+    "hll_sketch_rollup",
+    "incremental_agg_merge",
+    "join_asof_nearest",
+    "json_extract",
+    "mix_sources_epochs",
+    "mix_temperature_flatten",
+    "mm_audio_frames",
+    "mm_decode_features",
+    "mm_decode_jpeg",
+    "mm_decode_png",
+    "mm_features_real",
+    "mm_image_dhash",
+    "mm_image_neardup",
+    "mm_resize",
+    "mm_resize_real",
+    "ols_trend_per_type",
+    "quality_model_gate",
+    "quantile_cont_exact",
+    "rare_terms_df",
+    "robust_mad_stats",
+    "scalar_conditional",
+    "scalar_datetime_funcs2",
+    "scalar_hash_bitwise",
+    "scalar_math_funcs",
+    "scalar_string_funcs2",
+    "share_of_total",
+    "skew_key_diagnostics",
+    "stream_stream_join",
+    "stream_stream_left_outer",
+    "table_fingerprint",
+    "text_bpe_pretokenize",
+    "text_dup_spans",
 )
 
 DRIVER_WINDOW: tuple[str, ...] = (
     # sentinels (driver-stamped every round; regression canaries)
     "q1_pricing_summary", "flagship_integer_mean", "merge_upsert_cdc",
     "dedup_components", "funnel_steps",
-    # r14 tranche (plans/q_round14.py): filtered IVF-PQ serving and
-    # incremental index maintenance (VERDICT r13 asks #2 and #3);
-    # each displaced the newest pad slot per the mechanical rule
-    "sim_ann_ivfpq_filtered", "sim_ann_ivf_incremental",
 ) + WINDOW_STALENESS_PAD
 
 

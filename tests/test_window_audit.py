@@ -35,11 +35,14 @@ def _green_and_all() -> tuple[set[str], set[str]]:
     return green, seen
 
 
+def _run_audit(*args: str) -> str:
+    return subprocess.run(
+        [sys.executable, str(REPO / "tools" / "window_audit.py"), *args],
+        capture_output=True, text=True, check=True, cwd=REPO).stdout
+
+
 def _emit_next() -> tuple[list[str], list[str]]:
-    out = subprocess.run(
-        [sys.executable, str(REPO / "tools" / "window_audit.py"),
-         "--emit-next"], capture_output=True, text=True, check=True,
-        cwd=REPO).stdout
+    out = _run_audit("--emit-next")
     pad_m = re.search(
         r"WINDOW_STALENESS_PAD: tuple\[str, \.\.\.\] = \((.*?)\)",
         out, re.S)
@@ -83,3 +86,16 @@ def test_emit_next_window_is_exactly_50_and_disjoint():
     full = window + pad
     assert len(full) == 50
     assert len(set(full)) == 50, "duplicate names in emitted window"
+
+
+def test_emit_next_round_follows_newest_recorded_file():
+    """The emitted window belongs to the round after the newest recorded
+    CORRECTNESS file, whatever registry.ROUND says: a stale ROUND must
+    not mislabel it, and the ROUND line is emitted with the tuples so
+    the constant is pasted in the same step as the window."""
+    newest = max(int(re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+                     .group(1))
+                 for f in REPO.glob("CORRECTNESS_r*.json"))
+    out = _run_audit("--emit-next")
+    assert re.findall(r"^ROUND = (\d+)$", out, re.M) == [str(newest + 1)]
+    assert f"DRIVER_WINDOW for round {newest + 1}:" in out

@@ -9,13 +9,18 @@ Usage: python3 tools/window_audit.py [--list] [--emit-next]
   --list       also print the never-stamped entry names (the next
                rotation's fresh tier) and any red rows in the newest
                correctness file.
-  --emit-next  print a ready-to-paste DRIVER_WINDOW tuple for the NEXT
-               round: the 5 sentinels + the queued never-stamped
+  --emit-next  print a ready-to-paste ROUND constant and DRIVER_WINDOW
+               tuple for the NEXT round (newest recorded CORRECTNESS
+               file + 1): the 5 sentinels + the queued never-stamped
                entries (oldest-registered first, up to 45) + stamped
                staleness-pad entries to fill any spare slots. Run this
                only AFTER the driver has recorded the current round's
                CORRECTNESS file — rotating earlier would re-point the
                window before the pending entries get stamped.
+
+The plain audit warns when registry.ROUND is behind the newest recorded
+CORRECTNESS file: that round was recorded without the rotation, so the
+committed window is stale (tests/test_driver_window.py fails on it).
 """
 
 from __future__ import annotations
@@ -52,6 +57,12 @@ def main() -> None:
         flag = f"  RED: {sorted(red)}" if red else ""
         print(f"r{rnd}: {len(green)}/{len(rows)} green "
               f"(+{len(new)} new) cumulative {len(stamped)}{flag}")
+
+    newest = files[-1][0] if files else 0
+    if ROUND < newest:
+        print(f"WARNING: registry.ROUND = {ROUND} is behind "
+              f"CORRECTNESS_r{newest:02d}; paste the --emit-next output "
+              f"(ROUND + window) into plans/registry.py")
 
     never = [n for n in catalog if n not in stamped]
     in_window = [n for n in never if n in DRIVER_WINDOW]
@@ -98,8 +109,9 @@ def main() -> None:
         ranked = sorted((rnd, n) for n, rnd in latest.items()
                         if n in catalog and n not in taken)
         pad = [n for _rnd, n in ranked[:max(0, 45 - len(queued))]]
-        print(f"\n# DRIVER_WINDOW for round {ROUND + 1}: 5 sentinels + "
+        print(f"\n# DRIVER_WINDOW for round {newest + 1}: 5 sentinels + "
               f"{len(queued)} queued + {len(pad)} staleness pad")
+        print(f"ROUND = {newest + 1}\n")
         print("WINDOW_STALENESS_PAD: tuple[str, ...] = (")
         for n in pad:
             print(f'    "{n}",')
